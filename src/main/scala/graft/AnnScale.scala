@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the ANN tiers (docs/EXPERIMENTS.md): exact brute
@@ -16,7 +15,7 @@ import org.apache.spark.sql.functions._
   * Vector model: cluster c = id mod nClusters; component j =
   * centroid(c,j) + 0.15·noise(id,j), both hash-uniform in [-1,1].
   *
-  * Usage: runMain graft.AnnScale <nVecs> [dims=64] [nQueries=100] [nClusters=256] [cpus=32] [ops=all|brute,hamming,ivf,graph,filtered,mmr] [refineRounds=1] [bridge=6] [refineMode=rng|rng:<alpha>|topk] [entriesPerRegion=1] [appendShift=0]
+  * Usage: runMain graft.AnnScale <nVecs> [dims=64] [nQueries=100] [nClusters=256] [ops=all|brute,hamming,ivf,graph,filtered,mmr] [refineRounds=1] [bridge=6] [refineMode=rng|rng:<alpha>|topk] [entriesPerRegion=1] [appendShift=0]
   * Prints one JSON line per op (wall seconds, rows) plus recall@k of
   * each approximate tier against the exact baseline. The graph op
   * measures serve recall BEFORE and AFTER each NN-Descent refinement
@@ -32,14 +31,13 @@ object AnnScale {
     val dims = args.lift(1).map(_.toInt).getOrElse(64)
     val nQueries = args.lift(2).map(_.toInt).getOrElse(100)
     val nClusters = args.lift(3).map(_.toInt).getOrElse(256)
-    val cpus = args.lift(4).getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val ops = args.lift(5).getOrElse("all")
-    val refineRounds = args.lift(6).map(_.toInt).getOrElse(1)
-    val bridge = args.lift(7).map(_.toInt).getOrElse(6)
+    val ops = args.lift(4).getOrElse("all")
+    val refineRounds = args.lift(5).map(_.toInt).getOrElse(1)
+    val bridge = args.lift(6).map(_.toInt).getOrElse(6)
     // refine keep rule: "rng" = diversified (Vamana α-relaxed neighbor
     // selection, default α = 1.2; "rng:1.0" forces the strict HNSW
     // rule — moves SERVE recall), "topk" = pure best-k (EDGE recall)
-    val refineMode0 = args.lift(8).getOrElse("rng")
+    val refineMode0 = args.lift(7).getOrElse("rng")
     // strict parse (ADVICE r11): "rng:" / "rng:x:y" / a non-numeric
     // alpha previously either threw a raw NumberFormatException or
     // silently fell through to the default case, treating the whole
@@ -55,23 +53,16 @@ object AnnScale {
     }
     require(refineMode == "rng" || refineMode == "topk",
       s"refineMode must be rng or topk, got '$refineMode' (usage: rng | rng:<alpha> | topk)")
-    val entriesPerRegion = args.lift(9).map(_.toInt).getOrElse(1)
+    val entriesPerRegion = args.lift(8).map(_.toInt).getOrElse(1)
     // appendShift=1: the streamed-in 30% (id % 10 ∈ {7,8,9}) draws from
     // nClusters NEW cluster centers the base never saw — the
     // distribution-shift ingest regime where the entry tier's
     // staleness actually bites (the stationary regime measured no
     // decay: docs/EXPERIMENTS.md round 21)
-    val appendShift = args.lift(10).map(_.toInt).getOrElse(0) == 1
+    val appendShift = args.lift(9).map(_.toInt).getOrElse(0) == 1
     def want(op: String): Boolean = ops == "all" || ops.split(",").contains(op)
     val k = 10
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-ann-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session("graft-ann-scale")
 
     val plan = spark.range(nVecs).select(col("id").as("vec_id"),
       transform(sequence(lit(0), lit(dims - 1)), j => {

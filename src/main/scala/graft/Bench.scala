@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every registry query at the configured
-  * scale factor and prints ONE JSON line. Config mirrors the production
-  * posture (AQE on, shuffle partitions = cores — the reference fixed
-  * numReducers=100 for a 17-node cluster; on local[N] that would just
-  * add scheduling overhead).
+  * scale factor and prints ONE JSON line. The session is
+  * [[Graft.session]]'s production posture (AQE on, shuffle partitions =
+  * cores, bounded UI retention); `SPARK_GRAFT_CONF` overrides it, e.g.
+  * `spark.sql.streaming.stateStore.providerClass=...RocksDBStateStoreProvider`
+  * for the state-store A/B in EXPERIMENTS.md.
   *
   * Methodology: each query runs twice back-to-back and the FASTER run is
   * reported (JMH-style best-of-N with N=2). Round 1 showed first-run
@@ -21,54 +22,43 @@ import org.apache.spark.sql.SparkSession
   * line was truncated mid-JSON and failed to parse); the full-precision
   * per-run data lands in bench_local.json. */
 object Bench {
+  // Between-query hygiene, OUTSIDE the timed region: a query's leaked
+  // cache blocks and memory-sink temp views are its own bug when they
+  // slow IT down, but letting them pile up across 212 queries turns
+  // the tail of the alphabet into a measurement of the head's garbage
+  // (measured up to 15× inflation). JIT/codegen warmup — the part of
+  // session state a steady-state cluster job legitimately keeps — is
+  // unaffected. Explain scrubs between its runs the same way.
+  private var scrubs = 0
+  def scrub(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    // also free every still-registered RDD (cache() AND
+    // localCheckpoint blocks): a query whose RESULT is a local
+    // checkpoint (e.g. media_binary_ingest pinning rows so its
+    // scratch files can be deleted) legitimately leaves its blocks
+    // pinned while the count consumes them — but after the count
+    // they are residue the next 300 queries would carry in the
+    // block manager (VERDICT r11 #1's unattributed-regression
+    // direction: in-run floors measuring the head's garbage)
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+    spark.catalog.listTables().collect()
+      .filter(t => t.isTemporary)
+      .foreach(t => spark.catalog.dropTempView(t.name))
+    scrubs += 1
+    if (scrubs % 25 == 0) System.gc() // keep full GCs out of timed runs
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Optional state-store A/B knob: SPARK_GRAFT_STATE_PROVIDER=rocksdb
-    // runs every streaming drain on RocksDB (the 100 TB state backend)
-    // instead of the default HDFS-backed in-memory maps — used for the
-    // measured provider decision in EXPERIMENTS.md. TWS queries force
-    // RocksDB themselves either way.
-    val provider = sys.env.get("SPARK_GRAFT_STATE_PROVIDER").map {
-      case "rocksdb" =>
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      case other => other
-    }
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Even with the UI off, the app-status listener retains per-
-      // execution metadata incl. FULL plan strings (some of ours are
-      // hundreds of KB); at 212 queries × 2 runs the defaults (1000
-      // executions / 1000 jobs) pin hundreds of MB of driver heap and
-      // the resulting GC pressure contaminated late-alphabet queries
-      // (join_broadcast measured 0.28 s isolated vs 5.0 s mid-run).
-      .config("spark.sql.ui.retainedExecutions", "16")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "1000")
-      // one-shot stream drains never replay old batches; the default
-      // keeps 100 state-map versions resident per store, and ~30
-      // streaming queries' final states would otherwise stay loaded
-      // for the rest of the run
-      .config("spark.sql.streaming.minBatchesToRetain", "2")
-    val spark = provider.foldLeft(builder0)((b, p) =>
-      b.config("spark.sql.streaming.stateStore.providerClass", p))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session("graft-bench")
 
     // JVM/session warmup outside the timed region: one tiny action so the
     // first measured query doesn't pay SparkSession + codegen bootstrap
     spark.range(10).count()
 
     // Optional local-debug filter: SPARK_GRAFT_ONLY="a,b" times a subset.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = Graft.only()
     // Environment diagnostics (stderr, so stdout stays pure JSON): when a
     // driver-context run disagrees with the committed record, these make
     // the gap ATTRIBUTABLE (GC vs load vs memory) instead of a mystery —
@@ -108,35 +98,8 @@ object Bench {
       catch { case e: Throwable => System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}") }
       ((System.nanoTime() - t0) / 1e9, gcMillis() - g0)
     }
-    // Between-query hygiene, OUTSIDE the timed region: a query's leaked
-    // cache blocks and memory-sink temp views are its own bug when they
-    // slow IT down, but letting them pile up across 212 queries turns
-    // the tail of the alphabet into a measurement of the head's garbage
-    // (measured up to 15× inflation). JIT/codegen warmup — the part of
-    // session state a steady-state cluster job legitimately keeps — is
-    // unaffected.
-    var sinceGc = 0
-    def scrub(): Unit = {
-      spark.catalog.clearCache()
-      // also free every still-registered RDD (cache() AND
-      // localCheckpoint blocks): a query whose RESULT is a local
-      // checkpoint (e.g. media_binary_ingest pinning rows so its
-      // scratch files can be deleted) legitimately leaves its blocks
-      // pinned while the count consumes them — but after the count
-      // they are residue the next 300 queries would carry in the
-      // block manager (VERDICT r11 #1's unattributed-regression
-      // direction: in-run floors measuring the head's garbage)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.listTables().collect()
-        .filter(t => t.isTemporary)
-        .foreach(t => spark.catalog.dropTempView(t.name))
-      sinceGc += 1
-      if (sinceGc % 25 == 0) System.gc() // keep full GCs out of timed runs
-    }
     type RunRes = Seq[(String, (Double, Long), (Double, Long))]
-    def measurePass(): RunRes = SparkEntry.registry.sortBy(_.name)
-      .filter(q => only.forall(_.contains(q.name)))
+    def measurePass(): RunRes = Graft.selectedQueries()
       .map { q =>
         val a = run(q)
         // drop run 1's cache blocks before run 2: CacheManager matches
@@ -145,7 +108,7 @@ object Bench {
         // best-of-2 silently reports a warm-data-cache time (ADVICE r4)
         spark.catalog.clearCache()
         val b = run(q)
-        scrub()
+        scrub(spark)
         (q.name, a, b)
       }
     def f3(v: Double): String = f"$v%.3f"

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.CorpusOps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for batched BPE merge training (docs/EXPERIMENTS.md):
@@ -23,7 +22,7 @@ import org.apache.spark.sql.functions._
   * provably sequential-equivalent, and the probe verifies it on the
   * corpus it measures.
   *
-  * Usage: runMain graft.BpeScale [nDocs=20000] [merges=1000] [batch=32] [vocab=4000] [tpd=40] [cpus=32]
+  * Usage: runMain graft.BpeScale [nDocs=20000] [merges=1000] [batch=32] [vocab=4000] [tpd=40]
   */
 object BpeScale {
   def main(args: Array[String]): Unit = {
@@ -32,15 +31,7 @@ object BpeScale {
     val batch = args.lift(2).map(_.toInt).getOrElse(32)
     val vocab = args.lift(3).map(_.toInt).getOrElse(4000)
     val tpd = args.lift(4).map(_.toInt).getOrElse(40)
-    val cpus = args.lift(5).getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bpe-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session("graft-bpe-scale")
 
     val body = s"concat_ws(' ', transform(sequence(0, $tpd - 1), " +
       s"j -> substr(md5(concat('v', pmod(xxhash64(id * $tpd + j), $vocab))), 1, 12)))"

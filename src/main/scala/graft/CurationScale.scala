@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Curation
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for hashed-feature DSIR importance resampling
@@ -24,7 +23,7 @@ import org.apache.spark.sql.functions._
   * B = 2²² buckets: every distribution table is B-bounded no matter the
   * corpus vocabulary — the shape that holds at 100 TB.
   *
-  * Usage: runMain graft.CurationScale <nDocs> [tokensPerDoc=40] [plantEvery=100] [nTarget=2000] [cpus=32]
+  * Usage: runMain graft.CurationScale <nDocs> [tokensPerDoc=40] [plantEvery=100] [nTarget=2000]
   */
 object CurationScale {
   def main(args: Array[String]): Unit = {
@@ -32,15 +31,7 @@ object CurationScale {
     val tpd = args.lift(1).map(_.toInt).getOrElse(40)
     val plantEvery = args.lift(2).map(_.toInt).getOrElse(100)
     val nTarget = args.lift(3).map(_.toLong).getOrElse(2000L)
-    val cpus = args.lift(4).getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-curation-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session("graft-curation-scale")
 
     def body(seedExpr: String, vocab: String) = vocab match {
       case "domain" =>

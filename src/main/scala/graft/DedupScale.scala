@@ -40,23 +40,15 @@ import org.apache.spark.sql.functions._
   * of the cached index (no corpus shuffle: the delta side is broadcast,
   * ScaleSpec pins the plan). Self-check: exactly nDelta/10 verdicts.
   *
-  * Usage: runMain graft.DedupScale <nDocs> [tokensPerDoc=60] [plantEvery=20] [cpus=32] [mode=spans|lsh|ingest|stored|segments|winnow|winnowhot]
+  * Usage: runMain graft.DedupScale <nDocs> [tokensPerDoc=60] [plantEvery=20] [mode=spans|lsh|ingest|stored|segments|winnow|winnowhot]
   */
 object DedupScale {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(1000000L)
     val tpd = args.lift(1).map(_.toInt).getOrElse(60)
     val plantEvery = args.lift(2).map(_.toInt).getOrElse(20)
-    val cpus = args.lift(3).getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val mode = args.lift(4).getOrElse("spans")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-dedup-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val mode = args.lift(3).getOrElse("spans")
+    val spark = Graft.session("graft-dedup-scale")
 
     // body: tokensPerDoc picks from a 10k vocabulary, seeded by doc id
     val body = expr(

@@ -1,21 +1,35 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.operators.Iterate
+import graft.stats.Measure
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-/** Plan auditor: prints a one-line physical-plan summary per registry
-  * query (operator histogram + scale red flags) and exits non-zero if a
-  * query plans a scale anti-pattern it shouldn't. Run:
+/** Registry diagnostics: runs each registry query best-of-2 under
+  * [[Measure]] (Bench's scrub before each run), prints one line per
+  * query — wall seconds of the faster run, its Spark counters (jobs,
+  * stages, tasks, shuffle write/read, summed executor run and GC
+  * time), the executed plan's operator histogram and scale red flags —
+  * and exits non-zero if any query is flagged. Run:
   *
-  *   sbt "runMain graft.Explain /root/testdata/sf0.001"
+  *   [SPARK_GRAFT_ONLY="a,b"] sbt "runMain graft.Explain <sfDir> [planDir [suffix]]"
   *
-  * Red flags:
+  * The counters attribute a slow query's wall to job-count overhead vs
+  * shuffle volume vs compute before anything is changed. With
+  * `planDir`, each query's formatted executed plan is also written to
+  * `<planDir>/<query>_<suffix>.txt` (suffix default `after`) — the
+  * optimization-round plan evidence (plans/r12/). That is the plan the
+  * query RETURNS; lifecycle bundles that materialize internally
+  * surface there as LogicalRDD leaves (the iterative operators' round
+  * plans come from `spark.graft.debug.roundPlanDir`, see
+  * [[Iterate.dumpRoundPlan]]).
+  *
+  * Red flags (marked `!!`):
   *  - CartesianProduct anywhere (only the declared cross/theta joins may
   *    nested-loop, and those must be BroadcastNestedLoop, never
   *    CartesianProduct);
-  *  - parquet scans reading every column when the query projects few
-  *    (pruning check is per-query best-effort: flags scans whose
-  *    ReadSchema lists >8 fields).
+  *  - a BroadcastNestedLoopJoin outside [[nestedLoopAllowed]];
+  *  - parquet scans reading more columns than any testdata table has
+  *    (column pruning failed).
   */
 object Explain {
 
@@ -137,28 +151,20 @@ object Explain {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val planDir = args.lift(1)
+    val suffix = args.lift(2).getOrElse("after")
+    val spark = Graft.session("graft-explain")
+    spark.range(10).count() // session + codegen bootstrap outside the first run
 
-    // Optional local-debug filter, same contract as Bench/Verify:
-    // SPARK_GRAFT_ONLY="a,b" audits a subset.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     var flagged = 0
-    SparkEntry.registry.sortBy(_.name)
-      .filter(q => only.forall(_.contains(q.name))).foreach { q =>
+    Graft.selectedQueries().foreach { q =>
       try {
-        val df = q.fn(spark, sfDir)
-        df.count() // finalize AQE plan
+        // count() also finalizes the AQE plan inspected below
+        val (df, st) = Seq.fill(2) {
+          Bench.scrub(spark)
+          Measure.measured(spark) { val df = q.fn(spark, sfDir); df.count(); df }
+        }.minBy(_._2.wallClockSec)
+        planDir.foreach(Iterate.writePlan(df, _, s"${q.name}_$suffix"))
         val plan = df.queryExecution.executedPlan match {
           case a: AdaptiveSparkPlanExec => a.executedPlan
           case p => p
@@ -179,7 +185,11 @@ object Explain {
         // inspect the typed scan node, not the rendered text)
         if (scanWidths.exists(_ > 11)) flags += s"WIDE_SCAN(${scanWidths.max}cols)"
         val flagStr = if (flags.isEmpty) "" else flags.mkString("  !! ", ",", "")
-        println(f"${q.name}%-28s ${hist.take(7).mkString(", ")}$flagStr")
+        val counters = f"${st.wallClockSec}%7.3fs jobs=${st.jobs} stages=${st.stages} " +
+          f"tasks=${st.tasks} shuf_w=${st.shuffleBytesWritten / 1e6}%.1fMB " +
+          f"shuf_r=${st.shuffleBytesRead / 1e6}%.1fMB run=${st.executorRunMs}ms gc=${st.gcMs}ms"
+        println(f"${q.name}%-28s $counters  ${hist.take(7).mkString(", ")}$flagStr")
+        Console.out.flush()
         if (flags.nonEmpty) flagged += 1
       } catch {
         case e: Throwable =>

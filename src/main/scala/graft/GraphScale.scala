@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{Dedup, Graph}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the iterative graph operators (docs/EXPERIMENTS.md):
@@ -11,7 +10,7 @@ import org.apache.spark.sql.functions._
   * files, no driver-side materialization, same posture as the native
   * Zipf source runs).
   *
-  * Usage: runMain graft.GraphScale <nEdges> [nNodesDivisor=10] [cpus=32] [zipfSkew=0] [ops=all|pagerank,bfs,cc,inccc,lpa,kcore,sssp]
+  * Usage: runMain graft.GraphScale <nEdges> [nNodesDivisor=10] [zipfSkew=0] [ops=all|pagerank,bfs,cc,inccc,lpa,kcore,sssp]
   * With zipfSkew > 0 the destination degrees follow Zipf(s) (the G3
   * quantile sweep) — node 0 is a hub receiving ~1/H(n,s) of ALL edges.
   * Prints one JSON line per operator with wall seconds and output rows.
@@ -20,29 +19,16 @@ object GraphScale {
   def main(args: Array[String]): Unit = {
     val nEdges = args.headOption.map(_.toLong).getOrElse(1000000L)
     val div = args.lift(1).map(_.toLong).getOrElse(10L)
-    val cpus = args.lift(2).getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val skew = args.lift(3).map(_.toDouble).getOrElse(0.0)
+    val skew = args.lift(2).map(_.toDouble).getOrElse(0.0)
     val nNodes = math.max(2L, nEdges / div)
     // ops filter: "all" (default) or a comma list of
     // pagerank|bfs|cc|lpa|kcore — lets a probe re-measure one operator
     // without paying the whole battery
-    val ops = args.lift(4).getOrElse("all")
+    val ops = args.lift(3).getOrElse("all")
     def want(op: String): Boolean = ops == "all" || ops.split(",").contains(op)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-graph-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CONF="k=v;k=v" — extra session confs (the PlanDump
-    // contract): tier kill-switches, pin kill-switch, round-plan dir
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k.trim, v.trim)
-      })
+    // SPARK_GRAFT_CONF (see Graft.session) carries the tier
+    // kill-switches, the pin kill-switch and the round-plan dir
+    val spark = Graft.session("graft-graph-scale")
 
     // deterministic pseudo-random directed multigraph: src is a block
     // sweep (every node appears as a source, out-degree nEdges/nNodes),
@@ -67,14 +53,9 @@ object GraphScale {
     // window-cumsum + explode is generator cost, not graph cost)
     val (edges, _, _) = graft.operators.Iterate.ckpt(edgePlan)
 
-    val counters = new Profile.Counters
-    spark.sparkContext.addSparkListener(counters)
     def timed(name: String)(body: => Long): Unit = {
-      counters.reset()
-      val t0 = System.nanoTime()
-      val rows = body
-      val s = (System.nanoTime() - t0) / 1e9
-      println(f"""{"op":"$name","edges":$nEdges,"nodes":$nNodes,"sec":$s%.2f,"rows":$rows,"jobs":${counters.jobs},"stages":${counters.stages},"tasks":${counters.tasks},"shuf_write_mb":${counters.shufWrite / 1e6}%.1f,"shuf_read_mb":${counters.shufRead / 1e6}%.1f,"task_run_ms":${counters.runMs},"task_gc_ms":${counters.gcMs}}""")
+      val (rows, st) = graft.stats.Measure.measured(spark)(body)
+      println(f"""{"op":"$name","edges":$nEdges,"nodes":$nNodes,"sec":${st.wallClockSec}%.2f,"rows":$rows,"jobs":${st.jobs},"stages":${st.stages},"tasks":${st.tasks},"shuf_write_mb":${st.shuffleBytesWritten / 1e6}%.1f,"shuf_read_mb":${st.shuffleBytesRead / 1e6}%.1f,"task_run_ms":${st.executorRunMs},"task_gc_ms":${st.gcMs}}""")
       Console.out.flush()
     }
 

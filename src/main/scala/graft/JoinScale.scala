@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.Joins
 import graft.stats.Measure
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the explicit Bloom semi join (docs/EXPERIMENTS.md):
@@ -17,7 +16,7 @@ import org.apache.spark.sql.functions._
   * Key model: fact key = xxhash-uniform in [0, nKeys); dim = the keys
   * below nKeys·selPct/100 (so true selectivity = selPct% ± hash noise).
   *
-  * Usage: runMain graft.JoinScale <nFact> [nKeys=2000000] [selPct=10] [cpus=32]
+  * Usage: runMain graft.JoinScale <nFact> [nKeys=2000000] [selPct=10]
   * Prints one JSON line per variant: wall sec, result rows, shuffle
   * records/bytes written.
   */
@@ -26,24 +25,16 @@ object JoinScale {
     val nFact = args.headOption.map(_.toLong).getOrElse(40000000L)
     val nKeys = args.lift(1).map(_.toLong).getOrElse(2000000L)
     val selPct = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = args.lift(3).getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-join-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = Graft.session("graft-join-scale", Map(
       // the point of the probe is the explicit sketch path — keep
       // Spark's own runtime bloom injection out of both variants so the
       // comparison isolates it
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-      .config("spark.sql.optimizer.runtimeFilter.semiJoinReduction.enabled", "false")
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false",
+      "spark.sql.optimizer.runtimeFilter.semiJoinReduction.enabled" -> "false",
       // dim keys are dimension-scale but the probe measures the SHUFFLE
       // path: force the join itself to shuffle (as it would when dim
       // exceeds the broadcast budget at 100 TB)
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1"))
 
     val nDim = nKeys * selPct / 100
     // materialize generation OUTSIDE the timed region

@@ -1,28 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Phase decomposition for media_neardup's 32-core variance (VERDICT
   * r12 #1): times each internal stage of the pipeline separately, with
-  * GC attribution, over several repetitions. Debug tool like Profile;
-  * not part of the driver contract. */
+  * GC attribution, over SPARK_GRAFT_RUNS repetitions (default 3). Debug
+  * tool like Explain; not part of the Bench/Verify surface. */
 object MediaProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-media-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ui.retainedExecutions", "16")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session("graft-media-probe")
     import java.lang.management.ManagementFactory
     import scala.jdk.CollectionConverters._
     def gcMs(): Long =

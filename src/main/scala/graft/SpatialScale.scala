@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the grid-blocked DBSCAN (docs/EXPERIMENTS.md):
@@ -18,22 +17,14 @@ import org.apache.spark.sql.functions._
   * Poisson tail ~1e−10 — the core set must be EXACTLY the blob. The
   * probe asserts that, plus the single-cluster label.
   *
-  * Usage: runMain graft.SpatialScale <nPts> [eps=0.0005] [minPts=12] [cpus=32]
+  * Usage: runMain graft.SpatialScale <nPts> [eps=0.0005] [minPts=12]
   */
 object SpatialScale {
   def main(args: Array[String]): Unit = {
     val nPts = args.headOption.map(_.toLong).getOrElse(1000000L)
     val eps = args.lift(1).map(_.toDouble).getOrElse(0.0005)
     val minPts = args.lift(2).map(_.toInt).getOrElse(12)
-    val cpus = args.lift(3).getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-spatial-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session("graft-spatial-scale")
     // xxhash64 coordinates, NOT the Knuth multiplicative hash: hash32
     // is affine in id, so (hash32(id), hash32(id+c)) puts every point
     // on one dense line — a degenerate cloud where everything is core

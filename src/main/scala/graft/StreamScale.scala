@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Similarity
-import org.apache.spark.sql.{Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.functions._
 
 /** Streaming-ingest DEPTH probe for the graph-ANN admission gate
@@ -22,25 +22,17 @@ import org.apache.spark.sql.functions._
   * shard). The per-batch beam decisions are the registry query's
   * (k=3, nProbe=4, w=16, r=4).
   *
-  * Usage: runMain graft.StreamScale [nVecs=200000] [nBatches=12] [dims=64] [cpus=32] [nClusters=256] [entriesPerRegion=16]
+  * Usage: runMain graft.StreamScale [nVecs=200000] [nBatches=12] [dims=64] [nClusters=256] [entriesPerRegion=16]
   */
 object StreamScale {
   def main(args: Array[String]): Unit = {
     val nVecs = args.headOption.map(_.toLong).getOrElse(200000L)
     val nBatches = args.lift(1).map(_.toInt).getOrElse(12)
     val dims = args.lift(2).map(_.toInt).getOrElse(64)
-    val cpus = args.lift(3).getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val nClusters = args.lift(4).map(_.toInt).getOrElse(256)
-    val entriesPerRegion = args.lift(5).map(_.toInt).getOrElse(16)
+    val nClusters = args.lift(3).map(_.toInt).getOrElse(256)
+    val entriesPerRegion = args.lift(4).map(_.toInt).getOrElse(16)
     require(nBatches >= 1, s"nBatches must be >= 1: $nBatches")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session("graft-stream-scale")
 
     // AnnScale's clustered vector model (planted neighborhoods)
     val plan = spark.range(nVecs).select(col("id").as("vec_id"),

@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.DictionaryTagCounts
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for Aho–Corasick blocklist tagging (docs/EXPERIMENTS.md):
@@ -18,7 +17,7 @@ import org.apache.spark.sql.functions._
   * prints both at a small dictionary and AC alone at large ones
   * (the naive arm at 1000 phrases would just waste the machine).
   *
-  * Usage: runMain graft.TextScale <nDocs> [tokensPerDoc=60] [nPhrases=500] [plantEvery=100] [cpus=32] [ops=all|ac,naive]
+  * Usage: runMain graft.TextScale <nDocs> [tokensPerDoc=60] [nPhrases=500] [plantEvery=100] [ops=all|ac,naive]
   */
 object TextScale {
   def main(args: Array[String]): Unit = {
@@ -26,17 +25,9 @@ object TextScale {
     val tpd = args.lift(1).map(_.toInt).getOrElse(60)
     val nPhrases = args.lift(2).map(_.toInt).getOrElse(500)
     val plantEvery = args.lift(3).map(_.toInt).getOrElse(100)
-    val cpus = args.lift(4).getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val ops = args.lift(5).getOrElse("all")
+    val ops = args.lift(4).getOrElse("all")
     def want(op: String): Boolean = ops == "all" || ops.split(",").contains(op)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-text-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session("graft-text-scale")
 
     // corpus: tpd hash-picked tokens from a 10k vocabulary; every
     // plantEvery-th doc carries the planted phrase mid-text. The

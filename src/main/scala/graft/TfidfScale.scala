@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the stored tf-idf index lifecycle
@@ -24,21 +23,13 @@ import org.apache.spark.sql.functions._
   * delta (doc, term) rows; post-refresh doc count must equal
   * nDocs + nDelta.
   *
-  * Usage: runMain graft.TfidfScale <nDocs> [tokensPerDoc=60] [cpus=32]
+  * Usage: runMain graft.TfidfScale <nDocs> [tokensPerDoc=60]
   */
 object TfidfScale {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(200000L)
     val tpd = args.lift(1).map(_.toInt).getOrElse(60)
-    val cpus = args.lift(2).getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-tfidf-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session("graft-tfidf-scale")
 
     def timed(name: String)(body0: => Long): Long = {
       val t0 = System.nanoTime()

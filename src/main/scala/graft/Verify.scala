@@ -1,43 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // don't let retained per-execution plan strings (some huge) pile
-      // up on the driver heap across 200+ queries — see Bench
-      .config("spark.sql.ui.retainedExecutions", "16")
-      .config("spark.sql.streaming.minBatchesToRetain", "2")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CONF="k=v;k=v" — session confs for this pass (the
-    // PlanDump contract). Used by the tier-off oracle run: setting the
-    // four local-tier budgets to 0 forces every operator's DISTRIBUTED
-    // shape through the same correctness gate (VERDICT r12 #3).
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k.trim, v.trim)
-      })
+    // SPARK_GRAFT_CONF (see Graft.session) drives the tier-off oracle
+    // run: setting the four local-tier budgets to 0 forces every
+    // operator's DISTRIBUTED shape through the same correctness gate
+    // (VERDICT r12 #3).
+    val spark = Graft.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     // Optional local-debug filter: SPARK_GRAFT_ONLY="a,b" runs a subset.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    Graft.selectedQueries().foreach { q =>
+      try q.fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
       // queries are independent by contract — drop whatever cache
       // blocks this one left behind before the next starts

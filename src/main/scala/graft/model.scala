@@ -73,7 +73,8 @@ final case class JoinConfig(
 
 /** Per-join measurement — reference JoinStats.java:6-43 (wall times,
   * Hadoop Counters, map/reduce TaskReports), re-expressed from Spark
-  * listener events (see [[graft.stats.StatsListener]]).
+  * listener events (see [[graft.stats.StatsListener]]). Executor run and
+  * GC time are summed over tasks (task-time, not wall).
   */
 final case class JoinStats(
     wallClockSec: Double,
@@ -81,7 +82,13 @@ final case class JoinStats(
     outputRecords: Long,
     shuffleRecordsWritten: Long,
     shuffleBytesWritten: Long,
-    taskDurationsMs: Seq[Long]) {
+    taskDurationsMs: Seq[Long],
+    jobs: Int,
+    stages: Int,
+    shuffleBytesRead: Long,
+    executorRunMs: Long,
+    gcMs: Long) {
+  def tasks: Int = taskDurationsMs.size
   def taskTimeMeanMs: Double =
     if (taskDurationsMs.isEmpty) -1.0 else taskDurationsMs.sum.toDouble / taskDurationsMs.size
   def taskTimeMedianMs: Double =

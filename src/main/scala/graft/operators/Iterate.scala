@@ -71,13 +71,19 @@ object Iterate {
     * write `df`'s EXECUTED plan (call after the materializing action,
     * so AQE is final) to `<dir>/<tag>.txt`. No-op otherwise. */
   def dumpRoundPlan(df: DataFrame, tag: String): Unit =
-    df.sparkSession.conf.getOption("spark.graft.debug.roundPlanDir").foreach { dir =>
-      new java.io.File(dir).mkdirs()
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(dir, s"$tag.txt"),
-        df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))): Unit
-    }
+    df.sparkSession.conf.getOption("spark.graft.debug.roundPlanDir")
+      .foreach(writePlan(df, _, tag))
+
+  /** Write `df`'s formatted plan to `<dir>/<name>.txt` — the executed
+    * one when called after an action. Shared with graft.Explain's
+    * plan dump. */
+  def writePlan(df: DataFrame, dir: String, name: String): Unit = {
+    new java.io.File(dir).mkdirs()
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(dir, s"$name.txt"),
+      df.queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))): Unit
+  }
 
   /** Materialize `df` now; return (re-readable frame, freeable RDD
     * handle, materialized row count — convergence checks come free).

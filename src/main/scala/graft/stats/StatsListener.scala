@@ -1,7 +1,7 @@
 package graft.stats
 
 import graft.JoinStats
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
@@ -16,19 +16,35 @@ import scala.collection.mutable
   *    JoinSimulation.java:161-162)
   *  - wall time       ← nanoTime around the action
   *    (≙ JobUtils.time, JobUtils.java:17-31)
+  *  - job/stage counts, executor run and GC time — the per-query cost
+  *    split Explain and GraphScale print (job-count overhead vs shuffle
+  *    volume vs compute)
   */
 class StatsListener extends SparkListener {
   private val durations = mutable.ArrayBuffer.empty[Long]
+  private var jobs = 0
+  private var stages = 0
   private var shuffleRecords = 0L
   private var shuffleBytes = 0L
+  private var shuffleReadBytes = 0L
   private var outputRecords = 0L
+  private var runMs = 0L
+  private var gcMs = 0L
+
+  override def onJobStart(j: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
+
+  override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+    synchronized { stages += 1 }
 
   override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
     if (t.taskInfo != null && t.taskMetrics != null) {
       durations += (t.taskInfo.finishTime - t.taskInfo.launchTime)
       shuffleRecords += t.taskMetrics.shuffleWriteMetrics.recordsWritten
       shuffleBytes += t.taskMetrics.shuffleWriteMetrics.bytesWritten
+      shuffleReadBytes += t.taskMetrics.shuffleReadMetrics.totalBytesRead
       outputRecords += t.taskMetrics.outputMetrics.recordsWritten
+      runMs += t.taskMetrics.executorRunTime
+      gcMs += t.taskMetrics.jvmGCTime
     }
   }
 
@@ -39,7 +55,12 @@ class StatsListener extends SparkListener {
       outputRecords = outputRecords,
       shuffleRecordsWritten = shuffleRecords,
       shuffleBytesWritten = shuffleBytes,
-      taskDurationsMs = durations.toSeq)
+      taskDurationsMs = durations.toSeq,
+      jobs = jobs,
+      stages = stages,
+      shuffleBytesRead = shuffleReadBytes,
+      executorRunMs = runMs,
+      gcMs = gcMs)
   }
 }
 
@@ -48,17 +69,21 @@ object Measure {
   /** Run `action` under a fresh listener; return its result + stats.
     * Listener registration is per-measurement so concurrent queries
     * don't pollute each other's counters (single-driver harness, like
-    * the reference's sequential simulation loop). */
+    * the reference's sequential simulation loop). The listener bus is
+    * drained on both sides: before registering, so events still queued
+    * from earlier actions are not counted, and after the action, so its
+    * own trailing task/stage events are. */
   def measured[A](spark: SparkSession)(action: => A): (A, JoinStats) = {
+    val sc = spark.sparkContext
+    org.apache.spark.graft.SparkBridge.waitForListenerBus(sc, 30000)
     val l = new StatsListener
-    spark.sparkContext.addSparkListener(l)
+    sc.addSparkListener(l)
     val t0 = System.nanoTime()
     try {
       val a = action
       val wall = (System.nanoTime() - t0) / 1e9
-      // drain queued listener events before snapshotting
-      org.apache.spark.graft.SparkBridge.waitForListenerBus(spark.sparkContext, 30000)
+      org.apache.spark.graft.SparkBridge.waitForListenerBus(sc, 30000)
       (a, l.snapshot(wall, Seq.empty))
-    } finally spark.sparkContext.removeSparkListener(l)
+    } finally sc.removeSparkListener(l)
   }
 }

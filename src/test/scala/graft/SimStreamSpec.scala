@@ -81,6 +81,25 @@ class SimStreamSpec extends SparkSpec {
     assert(stats.taskTimeMaxMs >= stats.taskTimeMedianMs)
   }
 
+  test("stats listener drains the bus: exact job, stage and task counts") {
+    // a slow listener keeps events queued: an undrained snapshot would
+    // miss the measured job's trailing events, and a listener added
+    // without draining first would also count the unmeasured job's
+    val sc = spark.sparkContext
+    val slow = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Thread.sleep(50)
+    }
+    sc.addSparkListener(slow)
+    try {
+      sc.parallelize(1 to 10, 2).count()
+      val (n, st) = Measure.measured(spark) { sc.parallelize(1 to 100, 4).count() }
+      assert(n == 100L)
+      assert((st.jobs, st.stages, st.tasks) == ((1, 1, 4)), st)
+      assert(st.shuffleBytesRead == 0L)
+    } finally sc.removeSparkListener(slow)
+  }
+
   test("simulation step emits a schema-conformant CSV row") {
     val args = Simulation.Args(rows = 5000, zipfSkew = Some(0.7),
       workDir = java.nio.file.Files.createTempDirectory("graft_sim_t").toString)
